@@ -28,10 +28,10 @@ from pyspark.sql.types import StructType, TimestampType, TimestampNTZType
 def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
     """``createDataFrame(rows, schema)`` that plans as LocalTableScan.
 
-    ``rows``: list of tuples/Rows (positional) or dicts (by name, missing
-    keys NULL-filled).  ``schema``: DDL string or StructType.  Anything
-    the Arrow path cannot represent exactly falls back to the classic
-    createDataFrame with identical semantics.
+    ``rows``: list of tuples/Rows (positional, one value per field) or
+    dicts (by name, missing keys NULL-filled).  ``schema``: DDL string
+    or StructType.  Anything the Arrow path cannot represent exactly
+    falls back to the classic createDataFrame with identical semantics.
     """
     struct = schema
     if not isinstance(struct, StructType):
@@ -41,7 +41,11 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
             struct = _parse_datatype_string(schema)
         except Exception:
             return spark.createDataFrame(rows, schema)
-    if not any(
+    names = struct.fieldNames()
+    by_name = bool(rows) and isinstance(rows[0], dict)
+    # a positional row of the wrong length goes to the classic path,
+    # which raises — zip would silently truncate or NULL-fill it
+    if (by_name or all(len(r) == len(names) for r in rows)) and not any(
         isinstance(f.dataType, (TimestampType, TimestampNTZType))
         for f in struct.fields
     ):
@@ -49,12 +53,7 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
             import pyarrow as pa
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            names = struct.fieldNames()
-            data = (
-                rows
-                if rows and isinstance(rows[0], dict)
-                else [dict(zip(names, r)) for r in rows]
-            )
+            data = rows if by_name else [dict(zip(names, r)) for r in rows]
             tbl = pa.Table.from_pylist(data, schema=to_arrow_schema(struct))
             return spark.createDataFrame(tbl, struct)
         except Exception:

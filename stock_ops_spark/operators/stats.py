@@ -4,9 +4,13 @@ The reference maintains ``__table_stats__`` (row_count, min/max ts, min/max
 date) and ``__interval_stats__`` (the same, grouped by interval) per DB
 file, merged O(1) per batch (``sql_db.py:540-669``).  Parquet footers
 already carry per-file min/max, but the engine still exposes the same
-*catalog view*: a tiny stats parquet per dataset, merged per ingested
-batch with one aggregate + one coalesced overwrite — never a rescan of the
-store.
+*catalog view*: ``batch_stats`` aggregates one batch and ``merge_stats``
+folds it into the running stats — never a rescan of the store.  The
+manifest store (``sources/commitlog.py``) publishes both through its
+commit log, atomically with the data.
+
+``StatsTable`` is the crash-safe swap install for a small keyed parquet
+table; ``plans/matview.py`` keeps its partial aggregates in one.
 """
 
 from __future__ import annotations
@@ -15,7 +19,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from stock_ops_spark.schemas import TS_COL
 
@@ -62,25 +65,16 @@ def merge_stats(existing: DataFrame | None, delta: DataFrame, keys: list[str]) -
 
 
 class StatsTable:
-    """A small parquet-backed stats catalog for one dataset.
+    """A small keyed parquet table updated by merging deltas into it.
 
-    Crash safety: ``update`` materializes the merged stats into a
+    Crash safety: ``update`` materializes the merged table into a
     sibling ``.tmp`` directory and installs it with two renames (the
     ``streaming/dedup.py`` swap discipline) — a SIGKILL at ANY point
-    leaves either the old or the new stats directory whole, never a
+    leaves either the old or the new directory whole, never a
     half-written directory that poisons readers with
-    UNABLE_TO_INFER_SCHEMA (caught live by the hard-kill test in
-    ``tests/test_crash_recovery.py``).  ``read`` additionally adopts a
+    UNABLE_TO_INFER_SCHEMA.  ``read`` additionally adopts a
     completed-but-uninstalled ``.tmp`` / restores a stranded ``.old``
     so a kill BETWEEN the two renames loses nothing.
-
-    One window remains inherently open with plain parquet (no commit
-    log): a kill after the data append but before the stats merge
-    leaves the catalog one batch behind the store — the replay dedups
-    the rows away, so the skipped merge never re-fires.  ``rebuild``
-    heals that by re-aggregating the store (bounded, maintenance-time
-    only); Delta/Iceberg close it with a transaction log, plain
-    parquet cannot.
     """
 
     def __init__(
@@ -88,15 +82,14 @@ class StatsTable:
         spark: SparkSession,
         path: str,
         keys: list[str],
-        merge_fn=None,
+        merge_fn,
     ):
         self.spark = spark
         self.path = path
         self.keys = keys
-        # (existing|None, delta, keys) -> merged.  Defaults to the
-        # min/max/row_count stats merge; MatView reuses this table's
-        # crash-safe swap machinery with an additive-measure merge.
-        self.merge_fn = merge_fn or merge_stats
+        # (existing|None, delta, keys) -> merged, e.g. ``merge_stats`` or
+        # MatView's additive-measure merge.
+        self.merge_fn = merge_fn
 
     @property
     def _tmp(self) -> str:
@@ -155,8 +148,6 @@ class StatsTable:
     def update(self, delta: DataFrame) -> None:
         import shutil
 
-        if self.merge_fn is merge_stats and self._update_arrow(delta):
-            return
         existing = self.read()
         merged = self.merge_fn(existing, delta, self.keys)
         # merged's plan reads self.path, which the swap below replaces —
@@ -165,175 +156,6 @@ class StatsTable:
         shutil.rmtree(self._tmp, ignore_errors=True)
         shutil.rmtree(self._aside, ignore_errors=True)
         merged.coalesce(1).write.mode("overwrite").parquet(self._tmp)
-        if os.path.exists(self.path):
-            os.rename(self.path, self._aside)
-        os.rename(self._tmp, self.path)
-        shutil.rmtree(self._aside, ignore_errors=True)
-
-    def _update_arrow(self, delta: DataFrame) -> bool:
-        """Driver-side merge fast path for the DEFAULT stats merge (r12,
-        guide §1/§5).  The stats catalog is tiny by contract (one row
-        per ticker[, interval]), yet the Spark-side update paid three
-        jobs per call — read, checkpoint of the merged plan, coalesced
-        write — twice per ``ParquetStore.ingest_batch``; profiled at
-        ~0.3 s per call on the e2e replay floor (q334/q333/q45).  Here
-        the batch's delta is one small collect, the merge is a python
-        fold (same null-safe least/greatest semantics as
-        ``merge_stats``), and the write is one pyarrow file installed
-        through the SAME tmp-dir + two-rename swap, so the crash story
-        is unchanged.  Returns False — caller falls back to the Spark
-        merge — for value domains this path does not cover (ts cells
-        are int64 or string for every mode's ``batch_stats``; anything
-        else, or an undecidable type, declines).  MatView's custom
-        ``merge_fn`` never reaches this path."""
-        cols = self.keys + ["row_count", "min_ts", "max_ts"]
-        try:
-            drows = delta.select(*cols).collect()  # tiny by contract
-        except Exception:
-            return False
-        return self._merge_rows_arrow(drows)
-
-    def update_rows(self, rows: list) -> bool:
-        """Zero-job twin of ``update`` for a stats delta the caller has
-        ALREADY computed driver-side (the r12 micro-commit path): rows
-        are dicts/Rows with ``keys + [row_count, min_ts, max_ts]``.
-        Returns False — and writes nothing — when the merge needs Spark
-        (custom merge_fn, foreign catalog schema, uncovered ts domain);
-        the caller then goes through ``update`` with a DataFrame."""
-        if self.merge_fn is not merge_stats:
-            return False
-        return self._merge_rows_arrow(rows)
-
-    def _merge_rows_arrow(self, drows: list) -> bool:
-        import shutil
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        cols = self.keys + ["row_count", "min_ts", "max_ts"]
-
-        def _ok(v) -> bool:
-            return v is None or isinstance(v, (int, str))
-
-        if not all(
-            _ok(r["min_ts"]) and _ok(r["max_ts"])
-            and all(v is None or isinstance(v, str) for v in (r[k] for k in self.keys))
-            for r in drows
-        ):
-            return False
-
-        # existing rows with read()'s exact adoption/heal semantics
-        existing = None
-        if os.path.exists(self.path):
-            try:
-                existing = pq.read_table(self.path)
-                shutil.rmtree(self._tmp, ignore_errors=True)
-                shutil.rmtree(self._aside, ignore_errors=True)
-            except Exception:
-                existing = None
-                shutil.rmtree(self.path, ignore_errors=True)
-        if existing is None:
-            for cand in (self._tmp, self._aside):
-                if not os.path.exists(cand):
-                    continue
-                try:
-                    existing = pq.read_table(cand)
-                except Exception:
-                    shutil.rmtree(cand, ignore_errors=True)
-                    continue
-                os.rename(cand, self.path)
-                shutil.rmtree(self._tmp, ignore_errors=True)
-                shutil.rmtree(self._aside, ignore_errors=True)
-                break
-        if existing is not None and (
-            set(cols) - set(existing.column_names)
-            or not all(
-                pa.types.is_int64(existing.schema.field(c).type)
-                or pa.types.is_string(existing.schema.field(c).type)
-                or pa.types.is_null(existing.schema.field(c).type)
-                for c in ("row_count", "min_ts", "max_ts")
-            )
-            or not all(
-                pa.types.is_string(existing.schema.field(k).type)
-                or pa.types.is_null(existing.schema.field(k).type)
-                for k in self.keys
-            )
-        ):
-            return False  # foreign schema: let the Spark merge resolve it
-
-        def _nmin(a, b):
-            return b if a is None else a if b is None else min(a, b)
-
-        def _nmax(a, b):
-            return b if a is None else a if b is None else max(a, b)
-
-        fold: dict = {}
-        if existing is not None:
-            edata = {c: existing.column(c).to_pylist() for c in cols}
-            for i in range(existing.num_rows):
-                k = tuple(edata[c][i] for c in self.keys)
-                fold[k] = [
-                    edata["row_count"][i] or 0,
-                    edata["min_ts"][i],
-                    edata["max_ts"][i],
-                ]
-        for r in drows:
-            k = tuple(r[c] for c in self.keys)
-            e = fold.get(k)
-            if e is None:
-                fold[k] = [r["row_count"] or 0, r["min_ts"], r["max_ts"]]
-            else:
-                e[0] += r["row_count"] or 0
-                e[1] = _nmin(e[1], r["min_ts"])
-                e[2] = _nmax(e[2], r["max_ts"])
-        if not fold:
-            return False  # nothing to write and no schema to write it with
-
-        ts_vals = [v for e in fold.values() for v in (e[1], e[2]) if v is not None]
-        if ts_vals:
-            if all(isinstance(v, str) for v in ts_vals):
-                ts_type = pa.string()
-            elif all(isinstance(v, int) for v in ts_vals):
-                ts_type = pa.int64()
-            else:
-                return False  # mixed domain: fall back
-        elif existing is not None:
-            ts_type = existing.schema.field("min_ts").type
-            if pa.types.is_null(ts_type):
-                ts_type = pa.int64()
-        else:
-            return False  # all-NULL ts with no prior schema: fall back
-
-        keys_sorted = sorted(fold, key=lambda k: tuple(map(str, k)))
-        arrays = [
-            pa.array([k[i] for k in keys_sorted], type=pa.string())
-            for i in range(len(self.keys))
-        ] + [
-            pa.array([fold[k][0] for k in keys_sorted], type=pa.int64()),
-            pa.array([fold[k][1] for k in keys_sorted], type=ts_type),
-            pa.array([fold[k][2] for k in keys_sorted], type=ts_type),
-        ]
-        tbl = pa.table(arrays, names=cols)
-        shutil.rmtree(self._tmp, ignore_errors=True)
-        shutil.rmtree(self._aside, ignore_errors=True)
-        os.makedirs(self._tmp)
-        pq.write_table(tbl, os.path.join(self._tmp, "part-00000.parquet"))
-        if os.path.exists(self.path):
-            os.rename(self.path, self._aside)
-        os.rename(self._tmp, self.path)
-        shutil.rmtree(self._aside, ignore_errors=True)
-        return True
-
-    def rebuild(self, store_df: DataFrame, mode: str, by_interval: bool) -> None:
-        """Maintenance-time heal: recompute the catalog from the store
-        itself (one full aggregate — bounded, never on the hot path)."""
-        import shutil
-
-        full = batch_stats(store_df, mode, by_interval)
-        full = full.localCheckpoint(eager=True)
-        shutil.rmtree(self._tmp, ignore_errors=True)
-        shutil.rmtree(self._aside, ignore_errors=True)
-        full.coalesce(1).write.mode("overwrite").parquet(self._tmp)
         if os.path.exists(self.path):
             os.rename(self.path, self._aside)
         os.rename(self._tmp, self.path)

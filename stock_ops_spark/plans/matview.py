@@ -16,11 +16,11 @@ pure fold; it also dictates the contract:
 - **Append-only under observers.**  A retraction or in-place update is
   not expressible with additive partials (min/max cannot un-see a
   value).  Wire the view to the POST-dedup delta the store computes
-  (``ParquetStore``'s ``observers`` hook hands over exactly the rows
-  that entered the store, exactly once) — never to raw pre-dedup
+  (``ManifestStore``'s ``observers`` hook hands over exactly the rows
+  each commit published, exactly once) — never to raw pre-dedup
   batches, which replay on checkpoint recovery.
-- **Updates/deletes via the CDC feed.**  Against a ``ManifestStore``
-  (which has MERGE/DELETE and a ``read_changes`` feed), ``sync`` pulls
+- **Updates/deletes via the CDC feed.**  The store has MERGE/DELETE
+  and a ``read_changes`` feed; ``sync`` pulls
   the change rows past a persisted cursor and folds them exactly once:
   subtractable measures (sum/count) fold deletions NEGATIVELY — exact,
   O(|delta| + |groups|), no fact scan; a view with min/max measures
@@ -66,9 +66,11 @@ Measure algebra — maintenance cost per path (measured r9,
 - **Crash safety** comes from ``StatsTable``'s two-rename swap install
   (write ``.tmp`` → aside → install), reused via its ``merge_fn`` hook:
   a SIGKILL at any point leaves the previous or the next generation
-  whole.  The one open window (delta appended, fold killed before
-  install) is healed by ``rebuild`` — same analysis as the stats
-  catalog's, ``operators/stats.py``.
+  whole.  Under observers one window stays open (commit published,
+  fold killed before install): the replay dedups the rows away, so the
+  fold never re-fires; ``rebuild`` heals it from the store.  A
+  CDC-synced view has no such window — its cursor installs with the
+  data.
 
 At 100 TB the point of the MV is the read side: a dashboard query over
 the view touches |groups| rows instead of the fact table; the write-side
@@ -264,7 +266,7 @@ class MatView:
         self._table.update(self._partial(delta))
 
     def observer(self) -> Callable[[DataFrame, str], None]:
-        """Adapter for ``ParquetStore(observers=[...])``: ignores the
+        """Adapter for ``ManifestStore(observers=[...])``: ignores the
         mode argument and folds every post-dedup delta."""
         return lambda delta, _mode: self.refresh(delta)
 

@@ -116,12 +116,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", _default_driver_memory())
         # spark.cleaner.periodicGC.interval stays at Spark's default
-        # (30min).  The r11 5-minute override shipped as an unverified
-        # rider on the heap fix; the r12 isolated A/B (three alternating
-        # full-bench runs, with/without — OPTIMIZATION_r12.md) found no
-        # effect outside box noise, so per the accretion rule the
-        # non-default is dropped.  Deployments that churn enough blocks
-        # for cleaner lag to matter can set SPARK_GRAFT_PERIODIC_GC.
+        # (30min): an isolated A/B of a 5-minute override (three
+        # alternating full-bench runs — OPTIMIZATION_r12.md) found no
+        # effect outside box noise.  A deployment that needs it passes
+        # it through extra_conf.
         # Spark 4.1's checkpoint-file checksums (corruption DETECTION,
         # new in 4.x; atomic-rename commit semantics are unaffected)
         # leak their 64-thread ChecksumCheckpointFileManager pool on
@@ -139,21 +137,17 @@ def get_spark(
         # Output commit: v2 commits task files straight to the final dir
         # (one rename per file instead of two) and we skip the _SUCCESS
         # marker nobody reads.  Halving the metadata ops matters here
-        # because commit-heavy paths (ManifestStore batch dirs, store
-        # appends) write many small files, and the sandbox's ext4 is
-        # mounted with `discard` — every create/rename/delete can stall
-        # on the virtio disk (measured: q316 e2e 14.1/12.8 s v1 vs
+        # because commit-heavy paths (ManifestStore batch dirs, stats
+        # and CDC files) write many small files, and the sandbox's ext4
+        # is mounted with `discard` — every create/rename/delete can
+        # stall on the virtio disk (measured: q316 e2e 14.1/12.8 s v1 vs
         # 13.3/11.4 s v2, same session, alternating).  Crash model is
-        # unchanged: manifest commits make batch dirs visible atomically
-        # (v2 partials are invisible debris), and ParquetStore appends
-        # are at-least-once + dedup-on-replay, which absorbs a partially
-        # committed job's files exactly like any other replay.
+        # unchanged: a manifest commit makes its batch dir visible
+        # atomically, so a partially committed job's v2 files are
+        # invisible debris.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     )
-    pgc = os.environ.get("SPARK_GRAFT_PERIODIC_GC")
-    if pgc:
-        builder = builder.config("spark.cleaner.periodicGC.interval", pgc)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

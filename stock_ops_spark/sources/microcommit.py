@@ -8,8 +8,8 @@ measured 1.5-2.5 s per commit while the napkin floor (guide §1.3) for
 1 MB of I/O is milliseconds.  For a delta PROVEN small, the cheapest
 correct execution is: run the dedup/version plan ONCE, pull the rows to
 the driver as one Arrow table, and derive everything downstream — the
-grouped stat rows, the partitioned batch-dir files, the stats-catalog
-increment — in-process, the same posture as ``StatsTable._update_arrow``.
+grouped stat rows, the partitioned batch-dir files, the stats
+increment — in-process.
 
 Boundedness is proven, not assumed: ``collect_micro`` collects through a
 ``limit(bound+1)`` and DECLINES (returns None) when the extra row shows
@@ -20,15 +20,9 @@ the fast path covers exactly the micro-batch regime where per-job fixed
 costs dominate the hardware floor.
 
 Write-path crash model (matches the Spark committer it replaces):
-
-- ManifestStore batch dirs are INVISIBLE until the manifest rename
-  publishes them — files are written straight into the fresh batch dir;
-  a crash strands unreferenced debris, exactly like v2-committer partials.
-- ParquetStore appends land in the LIVE tree, so each file is written to
-  a dot-hidden temp name (readers skip ``.``/``_`` prefixes) and renamed
-  into place — per-file atomicity identical to a task commit; a partially
-  renamed batch is absorbed by at-least-once + dedup-on-replay, the same
-  contract the v2 committer already relies on.
+``ManifestStore`` batch dirs are INVISIBLE until the manifest commit
+publishes them, so files are written straight into the fresh batch dir;
+a crash strands unreferenced debris, exactly like v2-committer partials.
 
 File compatibility: zstd parquet, one file per partition value, rows
 sorted by (partition cols, ticker, ts) — the exact layout
@@ -145,43 +139,13 @@ def stat_rows_micro(
         r = dict(zip(gb, k))
         r.update(rc=e["rc"], nts=e["nts"], lo=e["lo"], hi=e["hi"])
         if parts:
-            r["tp"] = sorted(e["tp"])
+            # NULL-ts rows route to an all-NULL tuple: order NULL first,
+            # as Spark's ascending sort does, instead of comparing None
+            r["tp"] = sorted(
+                e["tp"], key=lambda t: tuple((v is not None, v) for v in t)
+            )
         rows.append(r)
     return rows
-
-
-def batch_stats_rows_micro(tbl, mode: str, by_interval: bool) -> list[dict]:
-    """Driver twin of ``operators.stats.batch_stats`` over a collected
-    delta: row_count / min_ts / max_ts per ticker(, interval), with the
-    interday date rendered as its ISO string exactly like the Spark
-    side's CAST(date AS STRING)."""
-    from stock_ops_spark.schemas import TS_COL
-
-    keys = ["ticker", "interval"] if by_interval else ["ticker"]
-    ts_col = TS_COL[mode]
-    data = _columns(tbl, list(dict.fromkeys(keys + [ts_col])))
-    as_str = mode == "historical_interday"
-    agg: dict = {}
-    for i in range(tbl.num_rows):
-        k = tuple(data[c][i] for c in keys)
-        ts = data[ts_col][i]
-        if ts is not None and as_str:
-            ts = str(ts)
-        e = agg.get(k)
-        if e is None:
-            agg[k] = [1, ts, ts]
-            continue
-        e[0] += 1
-        if ts is not None:
-            if e[1] is None or ts < e[1]:
-                e[1] = ts
-            if e[2] is None or ts > e[2]:
-                e[2] = ts
-    return [
-        {**dict(zip(keys, k)), "row_count": e[0], "min_ts": e[1],
-         "max_ts": e[2]}
-        for k, e in agg.items()
-    ]
 
 
 def _writable_types(tbl, parts: list[str]) -> bool:
@@ -212,13 +176,12 @@ def write_micro(
     parts: list[str],
     order_cols: list[str],
     dest: str,
-    live_tree: bool = False,
 ) -> bool:
-    """Write a collected delta as partitioned zstd parquet, driver-side.
+    """Write a collected delta as partitioned zstd parquet, driver-side,
+    into a directory no reader lists yet (an unpublished batch dir).
     Returns False (writing NOTHING) when any value domain falls outside
     what this path encodes identically to Spark's writer — the caller
-    then uses the Spark write.  ``live_tree`` selects the dot-hidden
-    temp-name + rename protocol for appends into a reader-visible tree."""
+    then uses the Spark write."""
     import pyarrow.parquet as pq
 
     if tbl.num_rows == 0 or not _writable_types(tbl, parts):
@@ -240,13 +203,7 @@ def write_micro(
     def _write_one(sub, d: str) -> None:
         os.makedirs(d, exist_ok=True)
         name = f"part-00000-{uuid.uuid4().hex}.zstd.parquet"
-        final = os.path.join(d, name)
-        if live_tree:
-            tmp = os.path.join(d, f".{name}.tmp")
-            pq.write_table(sub, tmp, compression="zstd")
-            os.rename(tmp, final)
-        else:
-            pq.write_table(sub, final, compression="zstd")
+        pq.write_table(sub, os.path.join(d, name), compression="zstd")
 
     if not parts:
         _write_one(tbl, dest)

@@ -4,7 +4,8 @@ The reference's historical task (``eodhd_historical_service.py:160-210``)
 fetches REST bars, transforms row-at-a-time, and emits each row through the
 Redis buffer to the writer.  Here the whole tail collapses: fetch →
 ``spark.createDataFrame`` → declarative transform (sources/transform.py) →
-``ParquetStore.ingest_batch`` (dedup/version/stats in one shot).
+``ManifestStore.ingest_batch`` (dedup/version/stats in one atomic
+commit).
 
 The streaming task drains the provider's frame iterator into the store the
 same way — or, for a live deployment, frames land in files/Kafka and
@@ -19,7 +20,7 @@ from stock_ops_spark.localrel import local_relation
 from stock_ops_spark.schemas import INTERDAY_INTERVALS
 from stock_ops_spark.sources import resilience as R
 from stock_ops_spark.sources import transform as X
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.providers import get as get_provider
 
 _INTERDAY_RAW = (
@@ -35,7 +36,7 @@ _QUOTE_RAW = "s string, t long, ap double, bp double, `as` long, bs long"
 
 def run_historical_task(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     provider: str,
     ticker: str,
     exchange: str,
@@ -81,7 +82,7 @@ def run_historical_task(
 
 def run_stream_task(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     provider: str,
     tickers: list[str],
     exchange: str,
@@ -128,9 +129,28 @@ def run_stream_task(
     return store.ingest_batch(normalized, "streaming")
 
 
+def _retain_cutoff(mode: str, keep_from, tz: str):
+    """An exchange-local (year[, month[, day]]) retention bound as the
+    mode's ts cutoff: local midnight of that date, in the ts column's
+    own domain (a date for interday, epoch s / ms otherwise)."""
+    import datetime as dt
+    from zoneinfo import ZoneInfo
+
+    bound = tuple(int(v) for v in keep_from)
+    if not 1 <= len(bound) <= 3:
+        raise ValueError(
+            f"keep_from must be [year[, month[, day]]], got {keep_from!r}"
+        )
+    day = dt.date(*bound, *(1,) * (3 - len(bound)))
+    if mode == "historical_interday":
+        return day
+    epoch_s = int(dt.datetime.combine(day, dt.time(), ZoneInfo(tz)).timestamp())
+    return epoch_s * 1000 if mode == "streaming" else epoch_s
+
+
 def run_command(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     command_type: str,
     command: dict,
     provider: str = "EODHD-mock",
@@ -200,27 +220,22 @@ def run_command(
         # Redis buffer inline at write time, writer.py:35-37,293-297 —
         # a parquet store runs maintenance as SCHEDULED jobs, which is
         # exactly what the scheduling module dispatches here).  Command:
-        # {op: compact|retain|widen_types, mode: <store mode>, ...args}.
+        # {op: compact|retain|widen_types, mode: <store mode>, ...args};
+        # retain takes keep_from, an exchange-local [Y[, M[, D]]] bound.
         # Returns a job-size integer so the scheduler's run log stays
-        # uniform (files coalesced away / partitions dropped / files
-        # rewritten).
-        from stock_ops_spark.sources import maintenance as M
-
+        # uniform (batch dirs coalesced away / batch dirs dropped or
+        # rewritten / files rewritten).
         op = command["op"]
         mode = command["mode"]
         if op == "compact":
-            res = M.compact(
-                store,
-                mode,
-                target_file_bytes=int(
-                    command.get("target_file_bytes", 128 << 20)
-                ),
-            )
-            return res["files_before"] - res["files_after"]
+            return max(store.compact(mode)["rewritten"] - 1, 0)
         if op == "retain":
-            return len(M.retain(store, mode, tuple(command["keep_from"])))
+            res = store.retain_before(
+                mode, _retain_cutoff(mode, command["keep_from"], store.tz)
+            )
+            return res["deleted_dirs"] + res["rewritten_dirs"]
         if op == "widen_types":
-            return M.widen_types(store, mode).get("files_rewritten", 0)
+            return store.widen_types(mode).get("files_rewritten", 0)
         raise ValueError(f"Unsupported maintenance op: {op!r}")
     if command_type == "start_stream":
         tickers = command["tickers"]
@@ -241,7 +256,7 @@ def run_command(
 
 def run_historical_backfill(
     spark: SparkSession,
-    store: ParquetStore,
+    store: ManifestStore,
     provider: str,
     tickers: list[str],
     exchange: str,

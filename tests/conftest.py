@@ -45,6 +45,22 @@ def _slow_entries() -> tuple[set, set]:
     return mods, nodes
 
 
+def pytest_report_header(config):
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+        return "test tier: full (SPARK_GRAFT_FULL_TESTS set)"
+    if any("::" in a for a in config.invocation_params.args):
+        return "test tier: explicit node ids (no deselection)"
+    mods, nodes = _slow_entries()
+    n = len(mods) + len(nodes)
+    if os.environ.get("SPARK_GRAFT_SLOW_ONLY"):
+        return f"test tier: slow only ({n} tests/slow_manifest.txt entries)"
+    return (
+        f"test tier: fast — deselects {n} tests/slow_manifest.txt entries "
+        f"({len(mods)} module paths, {len(nodes)} node ids); "
+        "SPARK_GRAFT_FULL_TESTS=1 runs them"
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return

@@ -1,6 +1,6 @@
-"""ManifestStore: the commit-log upgrade of ParquetStore.
+"""ManifestStore: the engine's store under a manifest commit log.
 
-Contract under test: same ingest semantics (dedup/version/stats, via
+Contract under test: the ingest semantics (dedup/version/stats, via
 the shared helpers), PLUS the properties only a transaction log can
 give — data+stats atomicity under SIGKILL, optimistic concurrency,
 snapshot time travel, atomic compaction, orphan GC.
@@ -24,7 +24,6 @@ from stock_ops_spark.sources.commitlog import (
     ManifestLog,
     ManifestStore,
 )
-from stock_ops_spark.sources.ingest import ParquetStore
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -76,27 +75,36 @@ def test_state_folds_adds_and_removes(tmp_path):
 # -- store semantics parity ----------------------------------------------
 
 
-def test_ingest_matches_parquet_store(spark, tmp_path, mstore):
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    for rows in (ROWS_B1, ROWS_B2, ROWS_B2):  # third is a full replay
-        nm = mstore.ingest_batch(_df(spark, rows), MODE)
-        np_ = pstore.ingest_batch(_df(spark, rows), MODE)
-        assert nm == np_
-    m = mstore.read_all(MODE)
-    p = pstore.read_all(MODE)
-    cols = sorted(p.columns)
-    key = lambda r: tuple(str(r[c]) for c in cols)  # noqa: E731
-    assert sorted(map(key, m.select(*cols).collect())) == sorted(
-        map(key, p.select(*cols).collect())
+def test_ingest_writes_expected_rows_versions_and_stats(spark, mstore):
+    """Dedup, versioning and running stats against rows written out by
+    hand: an exact duplicate and a full replay append nothing, a changed
+    payload for a stored key appends version 2."""
+    bump = [("SPY", 1751463000, 617.24, 618.72, 616.61, 999.0, 11824245, "1h")]
+    appended = [
+        mstore.ingest_batch(_df(spark, rows), MODE)
+        for rows in (ROWS_B1, ROWS_B2, ROWS_B2, bump)  # third: full replay
+    ]
+    assert appended == [3, 2, 0, 1]
+    got = sorted(
+        (r["ticker"], r["timestamp_UTC_s"], r["close"], r["version"])
+        for r in mstore.read_all(MODE).collect()
     )
-    # stats parity too — and the manifest store needed no rebuild
-    ms = {r["ticker"]: r for r in mstore.table_stats(MODE).collect()}
-    ps = {r["ticker"]: r for r in pstore.table_stats(MODE).collect()}
-    assert set(ms) == set(ps)
-    for t in ms:
-        assert ms[t]["row_count"] == ps[t]["row_count"]
-        assert ms[t]["min_ts"] == ps[t]["min_ts"]
-        assert ms[t]["max_ts"] == ps[t]["max_ts"]
+    assert got == [
+        ("SPY", 1751463000, 618.60, 1),
+        ("SPY", 1751463000, 999.0, 2),
+        ("SPY", 1751466600, 618.10, 1),
+        ("SPY", 1751549400, 620.50, 1),
+        ("VOO", 1751463000, 567.50, 1),
+        ("VOO", 1751549400, 569.50, 1),
+    ]
+    stats = {
+        r["ticker"]: (r["row_count"], r["min_ts"], r["max_ts"])
+        for r in mstore.table_stats(MODE).collect()
+    }
+    assert stats == {
+        "SPY": (4, 1751463000, 1751549400),
+        "VOO": (2, 1751463000, 1751549400),
+    }
 
 
 def test_time_travel_snapshots(spark, mstore):
@@ -204,8 +212,8 @@ for start in range(0, 40, 5):
 def test_sigkill_mid_ingest_keeps_data_and_stats_atomic(spark, tmp_path):
     """Kill -9 a child between commits and mid-commit: every surviving
     version must have data and stats CONSISTENT with each other (the
-    window ParquetStore documents as unclosable without a log), and a
-    replay converges with no rebuild_stats call."""
+    window a plain append cannot close without a log), and a replay
+    converges with no stats rebuild pass."""
     root = str(tmp_path / "mstore")
     script = tmp_path / "child.py"
     script.write_text(_CHILD.format(repo=REPO, root=root))
@@ -634,23 +642,35 @@ def test_read_where_unknown_meta_is_read_not_skipped(spark, mstore):
     assert df.count() == 0  # residual filter still correct
 
 
-# -- ParquetStore -> ManifestStore migration ------------------------------
+# -- plain Hive layout -> ManifestStore migration --------------------------
 
 
-def test_convert_from_parquet_store(spark, tmp_path, mstore):
+def _plain_hive_layout(spark, tmp_path, *batches):
+    """The on-disk layout a plain partitioned-parquet store leaves: the
+    versioned rows of a scratch store, written with ``partitionBy``.
+    Returns (path, scratch store)."""
+    from stock_ops_spark.sources.layout import PARTITION_COLS
+
+    scratch = ManifestStore(spark, str(tmp_path / "scratch"))
+    for rows in batches:
+        scratch.ingest_batch(_df(spark, rows), MODE)
+    path = str(tmp_path / "plain")
+    scratch.read_all(MODE).write.partitionBy(*PARTITION_COLS[MODE]).parquet(path)
+    return path, scratch
+
+
+def test_convert_from_plain_hive_layout(spark, tmp_path, mstore):
     """Adopting a plain-parquet history: snapshot equality, stats
     self-consistency, and dedup continuity for subsequent ingests."""
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    pstore.ingest_batch(_df(spark, ROWS_B1), MODE)
-    pstore.ingest_batch(_df(spark, ROWS_B2), MODE)
-    res = mstore.convert_from(pstore, MODE)
+    path, scratch = _plain_hive_layout(spark, tmp_path, ROWS_B1, ROWS_B2)
+    res = mstore.convert_from(path, MODE)
     assert res["version"] == 1 and res["adopted_rows"] == 5
     canon = lambda df: sorted(  # noqa: E731
         map(str, (sorted(r.asDict().items()) for r in df.collect()))
     )
-    assert canon(mstore.read_all(MODE)) == canon(pstore.read_all(MODE))
+    assert canon(mstore.read_all(MODE)) == canon(scratch.read_all(MODE))
     # stats recomputed from adopted rows match the source's running stats
-    assert canon(mstore.table_stats(MODE)) == canon(pstore.table_stats(MODE))
+    assert canon(mstore.table_stats(MODE)) == canon(scratch.table_stats(MODE))
     # dedup continuity: a full replay of either source batch is a no-op
     assert mstore.ingest_batch(_df(spark, ROWS_B2), MODE) == 0
     # fresh rows still land (version 2)
@@ -658,7 +678,7 @@ def test_convert_from_parquet_store(spark, tmp_path, mstore):
     assert mstore.version(MODE) == 2
     # a second adoption must refuse: version 1 is already taken
     with pytest.raises(ValueError, match="empty target"):
-        mstore.convert_from(pstore, MODE)
+        mstore.convert_from(path, MODE)
     # adopted dir carries data-skipping bounds
     st = mstore.log(MODE).state()
     assert any("timestamp_UTC_s" in m for m in st["meta"].values())
@@ -827,12 +847,10 @@ def test_read_changes_includes_convert_commit(spark, tmp_path, mstore):
     """A convert_from adoption IS version 1's change set: a fresh CDC
     consumer (cursor 0) must see every adopted row, with the change type
     derived from the adopted version column exactly like ingest."""
-    pstore = ParquetStore(spark, str(tmp_path / "pstore"))
-    pstore.ingest_batch(_df(spark, ROWS_B1), MODE)
     # conflict re-send: same key, changed payload -> version 2 row
     bump = [("SPY", 1751463000, 617.24, 618.72, 616.61, 999.0, 11824245, "1h")]
-    pstore.ingest_batch(_df(spark, bump), MODE)
-    mstore.convert_from(pstore, MODE)
+    path, _scratch = _plain_hive_layout(spark, tmp_path, ROWS_B1, bump)
+    mstore.convert_from(path, MODE)
     feed = mstore.read_changes(MODE, from_version=0)
     assert feed is not None
     counts = {

@@ -8,7 +8,7 @@ import datetime
 import pytest
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.reader import EmptyReadError, ReadProcess
 
 # intraday rows spanning two days of July 2025 (same month partition),
@@ -30,28 +30,19 @@ STREAM_ROWS = [
 ]
 
 
-# The FULL semantics matrix runs against BOTH stores: the plain
-# partitioned-parquet store and the manifest-committed store share the
-# delta computation (compute_versioned_delta) and must be observably
-# identical through ingest → layout → versioning → stats → read API.
-@pytest.fixture(params=["parquet", "manifest"])
-def store(request, spark, tmp_path):
-    if request.param == "parquet":
-        return ParquetStore(spark, str(tmp_path / "store"))
-    from stock_ops_spark.sources.commitlog import ManifestStore
-
+# The semantics matrix through ingest → layout → versioning → stats →
+# read API.  The single "manifest" param keeps the tests' node ids.
+@pytest.fixture(params=["manifest"])
+def store(spark, tmp_path):
     return ManifestStore(spark, str(tmp_path / "store"))
 
 
 def _has_partition_dir(root: str, *parts: str) -> bool:
-    """True when the Hive partition path exists anywhere under root —
-    directly (ParquetStore) or inside a batch-* dir (ManifestStore)."""
+    """True when the Hive partition path exists inside a batch-* dir."""
     import glob as _glob
     import os
 
-    direct = os.path.join(root, *parts)
-    nested = os.path.join(root, "batch-*", *parts)
-    return os.path.exists(direct) or bool(_glob.glob(nested))
+    return bool(_glob.glob(os.path.join(root, "batch-*", *parts)))
 
 
 def test_intraday_ingest_partitions_and_read(spark, store, tmp_path):
@@ -208,10 +199,12 @@ def test_backfill_past_prune_cap_still_dedups(spark, tmp_path, monkeypatch):
     """An ingest touching more partitions than the prune cap must fall back
     to an unpruned store probe (no unbounded driver collect) and keep the
     exact same dedup semantics."""
+    from stock_ops_spark.sources import commitlog as C
     from stock_ops_spark.sources import ingest as I
 
     monkeypatch.setattr(I, "_MAX_PRUNE_PARTITIONS", 2)
-    store = I.ParquetStore(spark, str(tmp_path / "store"))
+    monkeypatch.setattr(C, "_MAX_PRUNE_PARTITIONS", 2)
+    store = ManifestStore(spark, str(tmp_path / "store"))
     base = 1736951400  # 2025-01-15 09:30 EST
     day = 86400 * 31
     rows = [
@@ -230,9 +223,6 @@ def test_json_lines_source_ingests(spark, tmp_path):
     through the same ingest path as parquet batches."""
     import json
 
-    from stock_ops_spark import schemas as S
-    from stock_ops_spark.sources.ingest import ParquetStore
-
     rows = [
         {"ticker": "AAA", "timestamp_UTC_s": 1751463000 + i, "open": 1.0,
          "high": 2.0, "low": 0.5, "close": 1.5, "volume": 10, "interval": "1h"}
@@ -242,7 +232,7 @@ def test_json_lines_source_ingests(spark, tmp_path):
     src.write_text("\n".join(json.dumps(r) for r in rows))
 
     batch = spark.read.schema(S.HISTORICAL_INTRADAY).json(str(src))
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     assert store.ingest_batch(batch, "historical_intraday") == 5
     # re-sending the same JSON batch is fully deduplicated
     batch2 = spark.read.schema(S.HISTORICAL_INTRADAY).json(str(src))
@@ -250,24 +240,26 @@ def test_json_lines_source_ingests(spark, tmp_path):
 
 
 def test_read_all_tolerates_uncommitted_store_dir(spark, tmp_path):
-    """A reader racing the FIRST append sees the mode directory already
-    created but with zero committed parquet footers (only `_temporary`
-    staging).  That is an empty store (None), not an AnalysisException —
-    the race the SIGKILL crash-recovery test exposed."""
+    """A reader racing the FIRST commit sees the mode directory already
+    holding a batch dir and Spark staging debris, but no commit file.
+    That is an empty store (None): nothing unpublished is ever listed."""
     import os
 
-    from stock_ops_spark.sources.ingest import ParquetStore
-
-    store = ParquetStore(spark, str(tmp_path / "s"))
+    store = ManifestStore(spark, str(tmp_path / "s"))
     path = store.data_path("streaming")
     os.makedirs(os.path.join(path, "_temporary"))
+    os.makedirs(os.path.join(path, "batch-unpublished"))
+    with open(os.path.join(path, "batch-unpublished", "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
     assert store.read_all("streaming") is None
     # ...and a genuinely corrupt committed file still raises on action
-    with open(os.path.join(path, "part-00000.parquet"), "wb") as f:
-        f.write(b"not a parquet file")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        df = store.read_all("streaming")
-        if df is not None:
-            df.count()
+    df = spark.createDataFrame(STREAM_ROWS[:1], schema=S.STREAMING)
+    assert store.ingest_batch(df, "streaming") == 1
+    (committed,) = store.log("streaming").state()["dirs"]
+    for dirpath, _dirs, files in os.walk(os.path.join(path, committed)):
+        for name in files:
+            if name.endswith(".parquet"):
+                with open(os.path.join(dirpath, name), "wb") as f:
+                    f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        store.read_all("streaming").count()

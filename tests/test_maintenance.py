@@ -3,16 +3,19 @@
 Parity targets: reference XTRIM retention (writer.py:35-37,293-297) and
 opportunistic schema migration (sql_db.py:69-173); compaction is the
 parquet-native need their SQLite store never has (micro-batch file litter).
+Retention runs through the scheduler's ``maintain_store`` command shape.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
 
 from stock_ops_spark import schemas as S
-from stock_ops_spark.sources.ingest import ParquetStore
+from stock_ops_spark.sources import services
+from stock_ops_spark.sources.commitlog import ManifestStore
 from stock_ops_spark.sources.maintenance import (
     _data_files,
     _widened,
@@ -32,7 +35,19 @@ ROWS_BY_MONTH = [
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return ParquetStore(spark, str(tmp_path / "store"))
+    # no auto-compaction: each test decides when the dirs fold
+    return ManifestStore(spark, str(tmp_path / "store"), auto_compact_every=0)
+
+
+def _live_files(store, mode):
+    """Data files of the dirs the current snapshot references (replaced
+    dirs stay on disk until orphan GC)."""
+    root = store.data_path(mode)
+    return [
+        f
+        for d in store.log(mode).state()["dirs"]
+        for f in _data_files(os.path.join(root, d))
+    ]
 
 
 def _ingest_many_small_batches(spark, store, n_batches=4):
@@ -45,17 +60,15 @@ def _ingest_many_small_batches(spark, store, n_batches=4):
 
 def test_compact_reduces_files_preserves_rows_and_stats(spark, store):
     _ingest_many_small_batches(spark, store, n_batches=4)
-    path = store.data_path("historical_intraday")
-    before_files = _data_files(path)
-    assert len(before_files) >= 4  # one file set per micro-batch append
+    assert len(_live_files(store, "historical_intraday")) == 4  # one per commit
 
     before_rows = sorted(map(tuple, store.read_all("historical_intraday").collect()))
     before_stats = sorted(map(tuple, store.table_stats("historical_intraday").collect()))
 
     res = store.compact("historical_intraday")
-    assert res["files_after"] < res["files_before"]
-    # single partition (2025-01) → exactly one file at the default target
-    assert res["files_after"] == 1
+    assert res == {"rewritten": 4, "dirs_before": 4}
+    # single partition (2025-01) → exactly one file
+    assert len(_live_files(store, "historical_intraday")) == 1
 
     after_rows = sorted(map(tuple, store.read_all("historical_intraday").collect()))
     assert after_rows == before_rows
@@ -70,43 +83,60 @@ def test_compact_reduces_files_preserves_rows_and_stats(spark, store):
 
 
 def test_compact_preserves_ticker_ts_clustering(spark, store):
-    df = spark.createDataFrame(ROWS_BY_MONTH, schema=S.HISTORICAL_INTRADAY)
-    store.ingest_batch(df, "historical_intraday")
-    store.compact("historical_intraday")
+    for rows in (ROWS_BY_MONTH[2:], ROWS_BY_MONTH[:2]):  # out of order
+        df = spark.createDataFrame(rows, schema=S.HISTORICAL_INTRADAY)
+        store.ingest_batch(df, "historical_intraday")
+    assert store.compact("historical_intraday")["rewritten"] == 2
 
     import pyarrow.parquet as pq
 
-    for f in _data_files(store.data_path("historical_intraday")):
+    for f in _live_files(store, "historical_intraday"):
         t = pq.read_table(f, columns=["ticker", "timestamp_UTC_s"]).to_pandas()
         key = list(zip(t["ticker"], t["timestamp_UTC_s"]))
         assert key == sorted(key)  # rows clustered for min/max pruning
 
 
 def test_retain_drops_old_partitions_metadata_only(spark, store):
-    df = spark.createDataFrame(ROWS_BY_MONTH, schema=S.HISTORICAL_INTRADAY)
-    store.ingest_batch(df, "historical_intraday")
-    root = store.data_path("historical_intraday")
-    assert os.path.exists(os.path.join(root, "year=2024", "month=12"))
+    mode = "historical_intraday"
+    for row in ROWS_BY_MONTH:  # one commit per row: Dec 2024 in its own dir
+        df = spark.createDataFrame([row], schema=S.HISTORICAL_INTRADAY)
+        store.ingest_batch(df, mode)
+    before = set(store.log(mode).state()["dirs"])
+    (dec_dir,) = [
+        d for d, m in store.log(mode).state()["meta"].items()
+        if m["timestamp_UTC_s"][1] < 1735707600  # 2025-01-01 00:00 EST
+    ]
 
-    deleted = store.retain("historical_intraday", (2025, 1))
-    assert len(deleted) == 1 and "year=2024" in deleted[0]
-    assert not os.path.exists(os.path.join(root, "year=2024"))  # empty parent pruned
+    n = services.run_command(
+        spark, store, "maintain_store",
+        {"op": "retain", "mode": mode, "keep_from": [2025, 1]},
+    )
+    assert n == 1  # the Dec 2024 dir dropped whole, no straddler rewritten
+    assert set(store.log(mode).state()["dirs"]) == before - {dec_dir}
+    # metadata-only: the dropped dir's files were not touched (time travel
+    # and in-flight readers still see them until vacuum / orphan GC)
+    assert os.path.isdir(os.path.join(store.data_path(mode), dec_dir))
 
-    left = store.read_all("historical_intraday")
+    left = store.read_all(mode)
     assert left.count() == 3
     assert {r.year for r in left.select("year").distinct().collect()} == {2025}
+    st = {r.ticker: r for r in store.table_stats(mode).collect()}
+    assert st["SPY"].row_count == 2 and st["SPY"].min_ts == 1736951400
 
-    # keep_from deeper than grain raises; unpartitioned mode raises
+    # keep_from is exchange-local Y[, M[, D]]: local midnight in the
+    # ts column's own domain
+    cut = services._retain_cutoff
+    assert cut(mode, [2025, 1], "America/New_York") == 1735707600
+    assert cut("streaming", [2025], "America/New_York") == 1735707600_000
+    assert cut("historical_interday", [2025, 1, 2], "UTC") == datetime.date(2025, 1, 2)
     with pytest.raises(ValueError):
-        store.retain("historical_intraday", (2025, 1, 1))
-    with pytest.raises(ValueError):
-        store.retain("historical_interday", (2025,))
+        cut(mode, [2025, 1, 1, 0], "America/New_York")
 
 
 def test_widen_types_fixes_conflicting_files(spark, store):
     # batch 1 carries an extra int column; batch 2 the same column as double
-    # (the reference's NONE→REAL affinity-learned-later case) — the merged
-    # read fails until the int files are cast-rewritten
+    # (the reference's NONE→REAL affinity-learned-later case) — a merged
+    # read of the files fails until the int files are cast-rewritten
     from pyspark.sql import types as T
 
     def plus_score(t: str) -> T.StructType:  # .add() mutates; build fresh
@@ -127,8 +157,13 @@ def test_widen_types_fixes_conflicting_files(spark, store):
 
     conflicts = scan_type_conflicts(store, "historical_intraday")
     assert conflicts["score"]["widened"] == "double"
-    with pytest.raises(Exception):  # conflicting physical types break the read
-        store.read_all("historical_intraday").collect()
+
+    def merged_file_read():  # one mergeSchema relation over every file
+        files = _live_files(store, "historical_intraday")
+        return spark.read.option("mergeSchema", "true").parquet(*files).collect()
+
+    with pytest.raises(Exception):  # conflicting physical types break it
+        merged_file_read()
 
     res = store.widen_types("historical_intraday")
     assert res["columns"] == {"score": "double"}
@@ -140,6 +175,7 @@ def test_widen_types_fixes_conflicting_files(spark, store):
         for r in store.read_all("historical_intraday").collect()
     }
     assert rows == {(1736951400, 7.0), (1736955000, 7.5)}
+    assert len(merged_file_read()) == 2
 
     # idempotent: second run touches nothing
     assert store.widen_types("historical_intraday")["files_rewritten"] == 0
@@ -154,34 +190,9 @@ def test_widened_rules():
         _widened({"string", "int64"})
 
 
-def test_compact_touches_only_littered_partitions(spark, store):
-    # litter 2025-01 with four micro-batches; 2024-12 gets one clean file
-    _ingest_many_small_batches(spark, store, n_batches=4)
-    df = spark.createDataFrame(
-        [("SPY", 1734705000, 600.0, 601.0, 599.0, 600.5, 1000, "1h")],
-        schema=S.HISTORICAL_INTRADAY,
-    )
-    store.ingest_batch(df, "historical_intraday")
-    root = store.data_path("historical_intraday")
-    clean_dir = os.path.join(root, "year=2024", "month=12")
-    clean_before = {f: os.stat(f).st_ino for f in _data_files(clean_dir)}
-
-    res = store.compact("historical_intraday")
-    assert res["partitions_compacted"] == 1  # only the littered 2025-01
-    # the clean partition's files were not rewritten (same inodes)
-    assert {f: os.stat(f).st_ino for f in _data_files(clean_dir)} == clean_before
-    assert len(_data_files(os.path.join(root, "year=2025", "month=1"))) == 1
-    assert store.read_all("historical_intraday").count() == 5
-
-    # steady state: second run selects nothing and reads nothing
-    res2 = store.compact("historical_intraday")
-    assert res2["partitions_compacted"] == 0
-    assert res2["files_after"] == res2["files_before"]
-
-
 def test_compact_unpartitioned_mode(spark, store):
     # interday mode is unpartitioned: compaction coalesces the whole
-    # dataset's litter via the salt-only path
+    # dataset's dirs into one file
     import datetime as _dt
 
     rows = [
@@ -191,13 +202,11 @@ def test_compact_unpartitioned_mode(spark, store):
     for r in rows:
         df = spark.createDataFrame([r], schema=S.HISTORICAL_INTERDAY)
         assert store.ingest_batch(df, "historical_interday") == 1
-    path = store.data_path("historical_interday")
-    assert len(_data_files(path)) >= 4
+    assert len(_live_files(store, "historical_interday")) == 4
 
     before = sorted(map(tuple, store.read_all("historical_interday").collect()))
-    res = store.compact("historical_interday")
-    assert res["files_after"] < res["files_before"]
-    assert res["files_after"] == 1
+    assert store.compact("historical_interday")["rewritten"] == 4
+    assert len(_live_files(store, "historical_interday")) == 1
     after = sorted(map(tuple, store.read_all("historical_interday").collect()))
     assert after == before
 
@@ -228,7 +237,7 @@ def test_compact_preserves_evolved_schema_reads(spark, store):
         )
 
     before = snapshot()
-    res = store.compact("historical_intraday")
-    assert res["files_after"] == 1
+    store.compact("historical_intraday")
+    assert len(_live_files(store, "historical_intraday")) == 1
     after = snapshot()
     assert after == before == [(1736951400, None), (1736955000, 1.25)]

@@ -3,9 +3,9 @@ commits (retention, type widening), commit-level skipping through the
 ReadProcess API, and the combined lifecycle
 ingest → compact → vacuum → CDC-resume without a cursor gap.
 
-The ingest/read semantics matrix itself is parameterized over both
-stores in test_ingest_store.py; this file covers the surfaces that only
-exist (or only matter) under the commit log.
+The ingest/read semantics matrix itself lives in test_ingest_store.py;
+this file covers the surfaces that only exist (or only matter) under
+the commit log.
 """
 
 from __future__ import annotations
